@@ -121,7 +121,7 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
 SPREAD_TARGET_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", "24576"))
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame, max_parts: int | None = None) -> DataFrame:
     """Parallelism floor before CPU-heavy per-row work (guide §2.5).
 
     Small single-file inputs arrive as ONE scan partition (a parquet
@@ -143,12 +143,13 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     The fan-out target scales with the input's estimated bytes
     (optimizer stats: file size for scans, measured bytes for
     checkpointed relations — both metadata-only) at
-    ``SPREAD_TARGET_BYTES`` per partition, capped at
-    ``defaultParallelism`` (or ``min_parts`` when given): byte-tiny
-    relations no longer pay full-width task scheduling, and anything
-    with unknown stats keeps the full floor.
+    ``SPREAD_TARGET_BYTES`` per partition (at least 2), capped at
+    ``defaultParallelism`` or at ``max_parts`` when given — a CAP on the
+    fan-out, not a guaranteed minimum: byte-tiny relations no longer pay
+    full-width task scheduling, and anything with unknown stats keeps
+    the full floor.
     """
-    cap = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    cap = max_parts or df.sparkSession.sparkContext.defaultParallelism
     qe = df._jdf.queryExecution()
     if "Exchange" in qe.executedPlan().toString():
         return df
@@ -161,7 +162,7 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 def materialized_cache(df: DataFrame) -> DataFrame:
     """``cache()`` + eager ``count()`` + a MACHINE-CHECKED materialization
-    assertion — the honest-stats pattern (opt r13, guide §3.1) made safe
+    check — the honest-stats pattern (opt r13, guide §3.1) made safe
     by construction (ADVICE r13).
 
     The relations this wraps (exploded shingle/size relations) are
@@ -172,18 +173,23 @@ def materialized_cache(df: DataFrame) -> DataFrame:
     with a 50M-row build side at sf10 and the driver died (a static
     broadcast is never re-checked by AQE). The count() IS the cache
     build the first consumer would have paid; every downstream join is
-    then planned from the cache's MEASURED sizeInBytes. The assertion
-    exists because the OOM class this guards appears only at sf10+,
-    far beyond any test fixture: a refactor that drops the eager count
-    or unpersists early now fails every suite/driver run instead of
-    silently reverting to the explode underestimate."""
+    then planned from the cache's MEASURED sizeInBytes. The check exists
+    because the OOM class this guards appears only at sf10+, far beyond
+    any test fixture: a refactor that drops the eager count or
+    unpersists early now fails every test and parity run instead of
+    silently reverting to the explode underestimate. It raises a
+    ``RuntimeError`` rather than asserting, so ``python -O`` keeps it."""
     df = df.cache()
     df.count()
     rel = df._jdf.queryExecution().optimizedPlan()
-    assert (
+    if not (
         rel.getClass().getSimpleName() == "InMemoryRelation"
         and rel.cacheBuilder().isCachedColumnBuffersLoaded()
-    ), "honest-stats cache not materialized: joins would be planned from the explode underestimate (r12 sf10 static-broadcast OOM class)"
+    ):
+        raise RuntimeError(
+            "honest-stats cache not materialized: joins would be planned from "
+            "the explode underestimate (r12 sf10 static-broadcast OOM class)"
+        )
     return df
 
 

@@ -23,9 +23,13 @@ every step is replayed value-exactly by a DuckDB oracle.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import functools
+import threading
+from collections.abc import Callable
+from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1747,7 +1751,274 @@ def _frozen_boiler_drops(df_text: DataFrame, bkeys: DataFrame) -> DataFrame:
     return per.filter(F.lit(2) * F.col("nb") > F.col("nl")).select("doc_id")
 
 
-def _q344_oracle() -> str:
+def _overlap(
+    spark: SparkSession, label: str, fn: Callable[..., Any], *args: Any
+) -> Callable[[], Any]:
+    """Start ``fn(*args)`` on a worker thread and return its join: a
+    no-argument callable that waits for the worker, re-raises its
+    exception or returns its result. The one overlap primitive of the
+    incremental chains (q344/q349/q350).
+
+    The target is wrapped in ``inheritable_thread_target(spark)``, so
+    the worker's Spark jobs inherit the caller's job group and local
+    properties (a plain pool thread in pinned-thread mode starts with an
+    empty property set), and run under the job description ``label``,
+    which is reset in a ``finally`` whatever ``fn`` does."""
+    sc = spark.sparkContext
+    box: dict = {}
+
+    def run():
+        sc.setJobDescription(label)
+        try:
+            box["out"] = fn(*args)
+        except BaseException as exc:  # noqa: BLE001 — re-raised at the join
+            box["exc"] = exc
+        finally:
+            sc.setJobDescription(None)
+
+    worker = threading.Thread(target=inheritable_thread_target(spark)(run), daemon=True)
+    worker.start()
+
+    def join():
+        worker.join()
+        if "exc" in box:
+            raise box["exc"]
+        return box["out"]
+
+    return join
+
+
+class _Chain(NamedTuple):
+    """What the shared incremental skeleton hands its query back."""
+
+    hist: DataFrame       # history split of the checkpointed base
+    batch: DataFrame      # batch split
+    b_s1: DataFrame       # batch exact-dedup survivors
+    b_s2: DataFrame       # batch near-dup survivors (checkpointed)
+    hist_state: Any       # the history-side hook's return value
+
+
+def _incremental_chain(
+    spark: SparkSession,
+    sf_dir: str,
+    label: str,
+    hist_hook: Callable[[DataFrame, Column, DataFrame], Any],
+) -> _Chain:
+    """Stages 1-2 of the incremental chain (q344/q349/q350): the
+    checkpointed ``documents`` base and its seeded history/batch split,
+    the one-pass exact dedup, the two-sided MinHash relations, and the
+    batch near-dup verify against history + batch.
+
+    ``hist_hook(s1_all, is_hist, hist_drops)`` is the query's history
+    side: it receives the checkpointed stage-1 survivors of both
+    splits, the split predicate and the history-internal near-dup drops,
+    and builds whatever epoch state the query needs (its return value
+    comes back as ``hist_state``). It runs on the overlap worker, under
+    the job description ``label``, alongside the batch verify."""
+    from ..operators.sampling import portable_bucket
+    from .dedup_q import _band_keys, _portable_minhash_relations
+
+    base = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "text")
+        .localCheckpoint()
+    )
+    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
+
+    # ---- stage 1: exact dedup for BOTH sides in ONE window pass
+    # (opt r14, guide §2.4 "share one exchange"): history keep-first
+    # dedup, batch keep-first dedup, and the batch-vs-history hash
+    # anti-join are together equivalent to a single row_number window
+    # over md5(text) ordered history-first — exactly the oracle's s1
+    # CTE. One checkpoint job replaces r13's two (hist_s1 ckpt + b_s1
+    # ckpt with the hash-index anti-join); the per-side relations are
+    # filters over the shared checkpointed survivors.
+    w = Window.partitionBy(F.md5("text")).orderBy(
+        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
+    )
+    s1_all = (
+        base.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+        .localCheckpoint()
+    )
+    hist_s1 = s1_all.filter(is_hist)
+    b_s1 = s1_all.filter(~is_hist)
+
+    # OVERLAP (opt r14, guide §2.6): the history-side state build is
+    # independent of the batch side's shingle-cache and near-dup verify
+    # jobs. Two handoffs keep both sides busy: the worker builds the
+    # history relations while the main thread builds the batch ones (the
+    # batch candidate join needs both_h), then keeps running the history
+    # verify + the query's hook WHILE the main thread runs the batch
+    # verify and the b_s2 checkpoint.
+    hist_relations = _overlap(
+        spark, label, _portable_minhash_relations,
+        hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
+    )
+    # each worker is joined in a ``finally``: no worker outlives the
+    # builder, even when the main thread's side raised
+    try:
+        sh_b, both_b, _ = _portable_minhash_relations(
+            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
+        )
+    finally:
+        sh_h, both_h, cands_h = hist_relations()
+
+    def _hist_side():
+        # history-internal near-dup (cands_h is a<b oriented already)
+        hist_drops = _verify_drops_j05(
+            cands_h.select(
+                F.col("doc_b").alias("later_id"), F.col("doc_a").alias("earlier_id")
+            ),
+            sh_h, sh_h, both_h, both_h,
+        )
+        return hist_hook(s1_all, is_hist, hist_drops)
+
+    hist_side = _overlap(spark, label, _hist_side)
+
+    try:
+        # 2. near-dup: batch bands x history index + batch x batch (lower
+        #    id) — runs concurrently with the history side above
+        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
+        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
+        c_bh = (
+            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
+            .join(
+                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
+                ["band", "key"],
+            )
+            .select("later_id", "earlier_id")
+        )
+        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
+        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
+        c_bb = (
+            bb_a.join(bb_b, ["band", "key"])
+            .filter(F.col("earlier_id") < F.col("later_id"))
+            .select("later_id", "earlier_id")
+        )
+        # doc_id spaces are disjoint across the split, so the union stays
+        # duplicate-free after per-branch distinct
+        cands = c_bh.unionByName(c_bb).distinct()
+        # the UNIONs are new relations over the two MATERIALIZED shingle
+        # caches (see _portable_minhash_relations, opt r13): their static
+        # size estimate is the sum of the measured cache sizes — honest, so
+        # the planner broadcasts only when the bytes genuinely fit and AQE
+        # keeps its runtime re-plan on every other join. The r12 blanket
+        # merge hints this replaces forbade both.
+        old_sh = sh_h.unionByName(sh_b)
+        old_sz = (
+            both_h.select("doc_id", "n_sh")
+            .unionByName(both_b.select("doc_id", "n_sh"))
+        )
+        b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
+        b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
+    finally:
+        # Join the history side before releasing the caches: the hook's
+        # jobs (worker) and b_s2's checkpoint (here) are the last
+        # consumers of the shingle caches, and both have now materialized
+        # (opt r14 — this removes the r13 cross-statement ordering
+        # invariant ADVICE r13 flagged, where sh_h had to stay cached
+        # until a later job planned the lazy history lineage).
+        hist_state = hist_side()
+    sh_b.unpersist()
+    sh_h.unpersist()
+    return _Chain(base.filter(is_hist), base.filter(~is_hist), b_s1, b_s2, hist_state)
+
+
+def _hist_lang_state(df: DataFrame) -> DataFrame:
+    """The mergeable mixture state: ``df``'s per-lang doc counts
+    (``__n_hist``), checkpointed — metadata-sized, so the batch's
+    mixture job reads state instead of replaying the history chain."""
+    return (
+        df.groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("__n_hist"))
+        .localCheckpoint()
+    )
+
+
+def _merged_lang_counts(hist_lang: DataFrame, b_s3: DataFrame) -> DataFrame:
+    """The MERGED per-lang mixture state -> (lang, n_docs): history's
+    counts (``__n_hist``) plus the batch's quality survivors — equal by
+    construction to a full recompute's union counts."""
+    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
+    return hist_lang.join(b_lang, "lang", "full_outer").select(
+        "lang",
+        (
+            F.coalesce(F.col("__n_hist"), F.lit(0))
+            + F.coalesce(F.col("__n_batch"), F.lit(0))
+        ).alias("n_docs"),
+    )
+
+
+def _mixture_keep(s3: DataFrame, counts: DataFrame) -> DataFrame:
+    """Stage 4, the mixture: q122 per-lang keep thresholds from
+    ``counts`` (lang, n_docs), then the rows of ``s3`` whose seeded
+    bucket falls under their lang's threshold."""
+    from ..operators.sampling import portable_bucket
+
+    tot = counts.agg(
+        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
+    )
+    thresh = counts.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        F.least(
+            F.lit(_Q330_BUCKETS).cast("bigint"),
+            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
+        ).alias("keep_thresh"),
+    )
+    return s3.join(F.broadcast(thresh), "lang").filter(
+        portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
+        < F.col("keep_thresh")
+    )
+
+
+def _shard_col() -> Column:
+    """Stage 5, append-only shards: a doc's rank among its own run's
+    survivors of the same lang (q235 rule), modulo the shard count."""
+    w5 = Window.partitionBy("lang").orderBy(
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
+    )
+    return ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard")
+
+
+def _batch_stage_rows(
+    chain: _Chain, hist_lang: DataFrame, b_s3: DataFrame, *extra: DataFrame
+) -> DataFrame:
+    """q344/q350's stages 4-5 and output: the merged-state mixture and
+    the shard composition over the batch's quality survivors ``b_s3``,
+    after one count row per stage (``extra`` stage rows go between
+    2_near_dedup and 3_quality)."""
+    b_s4 = (
+        _mixture_keep(b_s3, _merged_lang_counts(hist_lang, b_s3))
+        .select("doc_id", "lang")
+        .localCheckpoint()
+    )
+    comp = (
+        b_s4.select("lang", _shard_col())
+        .groupBy("shard", "lang")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+        .select(F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs")
+    )
+    rows = [
+        _q330_stage_row(chain.hist, "0_history"),
+        _q330_stage_row(chain.batch, "0_batch"),
+        _q330_stage_row(chain.b_s1, "1_exact_dedup"),
+        _q330_stage_row(chain.b_s2, "2_near_dedup"),
+        *extra,
+        _q330_stage_row(b_s3, "3_quality"),
+        _q330_stage_row(b_s4, "4_mixture"),
+        comp,
+    ]
+    return functools.reduce(DataFrame.unionByName, rows)
+
+
+def _chain_oracle_prefix() -> str:
+    """The DuckDB CTEs every incremental-chain oracle (q344/q349/q350)
+    opens with: the seeded split, the history-first exact dedup (s1),
+    the MinHash/LSH candidates and their J >= 0.5 verify, and the
+    near-dup survivors (s2) — ending in a comma for the query's own
+    CTEs."""
     from .dedup_q import _MH_P, _mh_consts
 
     n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
@@ -1824,7 +2095,11 @@ verified AS (
 ),
 s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
          (SELECT 1 FROM verified v WHERE v.later_id = s1.doc_id)),
-meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
+"""
+
+
+def _q344_oracle() -> str:
+    return _chain_oracle_prefix() + f"""meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
                 len(list_distinct(t)) AS nd,
                 CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS ch
          FROM (SELECT doc_id, lang, is_hist,
@@ -1879,195 +2154,22 @@ _Q344_ORACLE = _q344_oracle()
     tags=("dedup", "curation", "mixture", "pipeline", "incremental", "llm"),
 )
 def q344_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sampling import portable_bucket
-    from .dedup_q import _band_keys, _portable_minhash_relations
+    def _hist_state(s1_all: DataFrame, is_hist: Column, hist_drops: DataFrame):
+        # spread on the CHECKPOINTED survivors (free probe): unspread,
+        # the gopher tokenize ran on s1_all's single materialized
+        # partition (opt r13; no-op at corpus scale). Deliberately not
+        # checkpointed: only the per-lang counts below read it.
+        hist_s2 = spread(s1_all).filter(is_hist).join(hist_drops, "doc_id", "left_anti")
+        return _hist_lang_state(_q330_gopher(hist_s2))
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
-    )
-    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
-    hist = base.filter(is_hist)
-    batch = base.filter(~is_hist)
-
-    # ---- stage 1: exact dedup for BOTH sides in ONE window pass
-    # (opt r14, guide §2.4 "share one exchange"): history keep-first
-    # dedup, batch keep-first dedup, and the batch-vs-history hash
-    # anti-join are together equivalent to a single row_number window
-    # over md5(text) ordered history-first — exactly the oracle's s1
-    # CTE. One checkpoint job replaces r13's two (hist_s1 ckpt + b_s1
-    # ckpt with the hash-index anti-join); the per-side relations are
-    # filters over the shared checkpointed survivors.
-    w = Window.partitionBy(F.md5("text")).orderBy(
-        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
-    )
-    s1_all = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
-    hist_s1 = s1_all.filter(is_hist)
-    b_s1 = s1_all.filter(~is_hist)
-
-    # OVERLAP (opt r14, guide §2.6): the history-side state build (the
-    # shingle-cache job, the history-internal near-dup verify, the
-    # per-lang mixture counts) is independent of the batch side's
-    # shingle-cache and near-dup verify jobs — chains the driver used
-    # to run back-to-back (the history verify ran SERIALLY inside
-    # b_s4's checkpoint job). Two handoffs keep both sides busy: the
-    # worker thread builds the history relations (the batch candidate
-    # join needs both_h), then keeps running the history verify +
-    # per-lang counts WHILE the main thread runs the batch verify and
-    # the b_s2 checkpoint; hist_lang is checkpointed (metadata-sized:
-    # per-lang counts) so b_s4's job reads state instead of replaying
-    # the verify.
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _rel_fut = _pool.submit(
-            _portable_minhash_relations,
-            hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
-        )
-
-        # batch shingle cache builds concurrently with the history one
-        sh_b, both_b, _ = _portable_minhash_relations(
-            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-        )
-        sh_h, both_h, cands_h = _rel_fut.result()
-
-        def _hist_side():
-            spark.sparkContext.setJobDescription("q344: history near-dup state")
-            # history-internal near-dup (cands_h is a<b oriented already)
-            hist_drops = _verify_drops_j05(
-                cands_h.select(
-                    F.col("doc_b").alias("later_id"), F.col("doc_a").alias("earlier_id")
-                ),
-                sh_h, sh_h, both_h, both_h,
-            )
-            # spread on the CHECKPOINTED survivors (free probe): unspread,
-            # the gopher tokenize ran on s1_all's single materialized
-            # partition (opt r13; no-op at corpus scale)
-            hist_s2 = spread(s1_all).filter(is_hist).join(
-                hist_drops, "doc_id", "left_anti"
-            )
-            # the mergeable mixture state: per-lang quality-survivor counts
-            hist_lang = (
-                _q330_gopher(hist_s2)
-                .groupBy("lang")
-                .agg(F.count(F.lit(1)).alias("__n_hist"))
-                .localCheckpoint()
-            )
-            spark.sparkContext.setJobDescription(None)
-            return hist_lang
-
-        _lang_fut = _pool.submit(_hist_side)
-
-        # 2. near-dup: batch bands x history index + batch x batch (lower
-        #    id) — runs concurrently with the history verify above
-        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
-        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
-        c_bh = (
-            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-            .join(
-                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
-                ["band", "key"],
-            )
-            .select("later_id", "earlier_id")
-        )
-        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
-        c_bb = (
-            bb_a.join(bb_b, ["band", "key"])
-            .filter(F.col("earlier_id") < F.col("later_id"))
-            .select("later_id", "earlier_id")
-        )
-        # doc_id spaces are disjoint across the split, so the union stays
-        # duplicate-free after per-branch distinct
-        cands = c_bh.unionByName(c_bb).distinct()
-        # the UNIONs are new relations over the two MATERIALIZED shingle
-        # caches (see _portable_minhash_relations, opt r13): their static
-        # size estimate is the sum of the measured cache sizes — honest, so
-        # the planner broadcasts only when the bytes genuinely fit and AQE
-        # keeps its runtime re-plan on every other join. The r12 blanket
-        # merge hints this replaces forbade both.
-        old_sh = sh_h.unionByName(sh_b)
-        old_sz = (
-            both_h.select("doc_id", "n_sh")
-            .unionByName(both_b.select("doc_id", "n_sh"))
-        )
-        b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
-        b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
-        # Join the history side before releasing the caches: hist_lang's
-        # checkpoint (worker thread) and b_s2's checkpoint (here) are the
-        # two last consumers of the shingle caches, and both have now
-        # materialized (opt r14 — this removes the r13 cross-statement
-        # ordering invariant ADVICE r13 flagged, where sh_h had to stay
-        # cached until b_s4's job planned the lazy history lineage).
-        hist_lang = _lang_fut.result()
-        sh_b.unpersist()
-        sh_h.unpersist()
+    chain = _incremental_chain(spark, sf_dir, "q344: history near-dup state", _hist_state)
 
     # 3. quality (per-doc Gopher rules — see the header for why the
     # corpus-relative boilerplate rule is frozen per release epoch).
     # spread (opt r13): parallelism floor over the checkpointed stage
     # output before the tokenize pass; no-op at corpus scale.
-    b_s3 = _q330_gopher(spread(b_s2)).localCheckpoint()
-
-    # 4. mixture thresholds from the MERGED per-lang state
-    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
-    merged = (
-        hist_lang.join(b_lang, "lang", "full_outer")
-        .select(
-            "lang",
-            (
-                F.coalesce(F.col("__n_hist"), F.lit(0))
-                + F.coalesce(F.col("__n_batch"), F.lit(0))
-            ).alias("n_docs"),
-        )
-    )
-    tot = merged.agg(
-        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-    )
-    thresh = merged.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.least(
-            F.lit(_Q330_BUCKETS).cast("bigint"),
-            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-        ).alias("keep_thresh"),
-    )
-    b_s4 = (
-        b_s3.join(F.broadcast(thresh), "lang")
-        .filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        .select("doc_id", "lang")
-        .localCheckpoint()
-    )
-
-    # 5. append-only shard assignment over the batch's survivors
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-    comp = (
-        b_s4.select(
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
-        .groupBy("shard", "lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs")
-    )
-
-    return (
-        _q330_stage_row(hist, "0_history")
-        .unionByName(_q330_stage_row(batch, "0_batch"))
-        .unionByName(_q330_stage_row(b_s1, "1_exact_dedup"))
-        .unionByName(_q330_stage_row(b_s2, "2_near_dedup"))
-        .unionByName(_q330_stage_row(b_s3, "3_quality"))
-        .unionByName(_q330_stage_row(b_s4, "4_mixture"))
-        .unionByName(comp)
-    )
+    b_s3 = _q330_gopher(spread(chain.b_s2)).localCheckpoint()
+    return _batch_stage_rows(chain, chain.hist_state, b_s3)
 
 
 # ---------------------------------------------------------------------------
@@ -2243,84 +2345,8 @@ def q348_boiler_epoch_freeze(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q350_oracle() -> str:
-    from .dedup_q import _MH_P, _mh_consts
-
-    n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
-    rows = k // bands
     ll = _LINE_LEN
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(_mh_consts(k))
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, lang, text,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
-              || ':{_Q344_SPLIT_SEED}'), 1, 15)) AS BIGINT) % 10000
-           < {_Q344_HIST_CUT} AS is_hist
-  FROM documents
-),
-s1 AS (
-  SELECT doc_id, lang, text, is_hist FROM (
-    SELECT b.*, row_number() OVER (
-      PARTITION BY md5(text)
-      ORDER BY CASE WHEN is_hist THEN 0 ELSE 1 END, doc_id) AS rn
-    FROM base b) q
-  WHERE rn = 1
-),
-toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
-  FROM toks1 WHERE len(t) >= {n}
-),
-ex AS (SELECT doc_id, shingle,
-              CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-       FROM sh),
-sigs AS (SELECT doc_id,
-         {mins}
-         FROM ex GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS later_id, y.doc_id AS earlier_id
-  FROM banded x
-  JOIN s1 sx ON sx.doc_id = x.doc_id
-  JOIN banded y ON x.band = y.band AND x.key = y.key
-  JOIN s1 sy ON sy.doc_id = y.doc_id
-  WHERE (sy.is_hist AND NOT sx.is_hist)
-     OR (sy.is_hist = sx.is_hist AND sy.doc_id < sx.doc_id)
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-vcommon AS (
-  SELECT c.later_id, c.earlier_id, COUNT(*) AS nc
-  FROM cands c
-  JOIN sh a ON a.doc_id = c.later_id
-  JOIN sh b ON b.doc_id = c.earlier_id AND b.shingle = a.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT v.later_id FROM vcommon v
-  JOIN sizes sa ON sa.doc_id = v.later_id
-  JOIN sizes sb ON sb.doc_id = v.earlier_id
-  WHERE 2 * v.nc >= sa.n_sh + sb.n_sh - v.nc
-),
-s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
-         (SELECT 1 FROM verified v WHERE v.later_id = s1.doc_id)),
-toks2 AS (SELECT doc_id, lang, is_hist,
+    return _chain_oracle_prefix() + f"""toks2 AS (SELECT doc_id, lang, is_hist,
                  regexp_extract_all(text, '\\S+') AS t FROM s2),
 hls AS (SELECT doc_id, unnest(list_transform(range((len(t) + {ll - 1}) // {ll}),
           i -> array_to_string(list_slice(t, i * {ll} + 1,
@@ -2397,191 +2423,46 @@ _Q350_ORACLE = _q350_oracle()
     tags=("curation", "incremental", "boilerplate", "llm"),
 )
 def q350_incremental_frozen_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sampling import portable_bucket
-    from .dedup_q import _band_keys, _portable_minhash_relations
+    def _frozen_epoch(s1_all: DataFrame, is_hist: Column, hist_drops: DataFrame):
+        # checkpointed (unlike q344, which re-derives from s1_all): the
+        # frozen-epoch state below (boiler keys + mixture state) reads
+        # the history near-dup survivors from multiple jobs.
+        hist_s2 = (
+            s1_all.filter(is_hist)
+            .join(hist_drops, "doc_id", "left_anti")
+            .localCheckpoint()
+        )
+        # spread (opt r13): three tokenize/line passes consume the
+        # checkpointed history survivors — parallelism floor once,
+        # no-op at corpus scale
+        hs2 = spread(hist_s2)
+        # the FROZEN epoch key set (q330's key source: near-dup
+        # survivors) — metadata-sized, materialized eagerly so no later
+        # job replays the history line explode
+        bkeys = _frozen_boiler_keys(hs2).localCheckpoint()
+        # mergeable mixture state: per-lang survivors of quality AND the
+        # frozen-boiler majority rule (both epoch-stable)
+        hist_q = _q330_gopher(hs2).join(
+            _frozen_boiler_drops(hs2, bkeys), "doc_id", "left_anti"
+        )
+        return bkeys, _hist_lang_state(hist_q)
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
+    chain = _incremental_chain(
+        spark, sf_dir, "q350: frozen-epoch history state", _frozen_epoch
     )
-    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
-    hist = base.filter(is_hist)
-    batch = base.filter(~is_hist)
-
-    # ---- stage 1: exact dedup for BOTH sides in ONE window pass
-    # (opt r14, guide §2.4 — see q344: the oracle's s1 CTE shape; one
-    # checkpoint job replaces hist_s1 ckpt + b_s1 ckpt + the hash
-    # anti-join)
-    w = Window.partitionBy(F.md5("text")).orderBy(
-        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
-    )
-    s1_all = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
-    hist_s1 = s1_all.filter(is_hist)
-    b_s1 = s1_all.filter(~is_hist)
-
-    # OVERLAP (opt r14, guide §2.6 — q344's two-handoff shape, plus the
-    # frozen-epoch state): the worker thread builds the history
-    # relations, then keeps running the history verify, the hist_s2
-    # checkpoint, the FROZEN boiler-key freeze and the per-lang mixture
-    # counts while the main thread runs the batch shingle cache, the
-    # batch verify and the b_s2 checkpoint. Join points: the batch
-    # candidate join needs both_h (first future); b_s3's frozen filter
-    # needs bkeys (second future).
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _rel_fut = _pool.submit(
-            _portable_minhash_relations,
-            hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
-        )
-        # batch shingle cache builds concurrently with the history one
-        sh_b, both_b, _ = _portable_minhash_relations(
-            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-        )
-        sh_h, both_h, cands_h = _rel_fut.result()
-
-        def _hist_side():
-            spark.sparkContext.setJobDescription("q350: frozen-epoch history state")
-            hist_drops = _verify_drops_j05(
-                cands_h.select(
-                    F.col("doc_b").alias("later_id"),
-                    F.col("doc_a").alias("earlier_id"),
-                ),
-                sh_h, sh_h, both_h, both_h,
-            )
-            # checkpointed (unlike q344, which re-derives from s1_all):
-            # the frozen-epoch state below (boiler keys + mixture
-            # state) reads the history near-dup survivors from
-            # multiple jobs.
-            hist_s2 = hist_s1.join(
-                hist_drops, "doc_id", "left_anti"
-            ).localCheckpoint()
-
-            # the FROZEN epoch key set (q330's key source: near-dup
-            # survivors) — metadata-sized, materialized eagerly so no
-            # later job replays the history line explode
-            # spread (opt r13): three tokenize/line passes consume the
-            # checkpointed history survivors — parallelism floor once,
-            # no-op at corpus scale
-            hs2 = spread(hist_s2)
-            bkeys = _frozen_boiler_keys(hs2).localCheckpoint()
-            # mergeable mixture state: per-lang survivors of quality
-            # AND the frozen-boiler majority rule (both epoch-stable)
-            hist_q = _q330_gopher(hs2).join(
-                _frozen_boiler_drops(hs2, bkeys), "doc_id", "left_anti"
-            )
-            hist_lang = (
-                hist_q.groupBy("lang")
-                .agg(F.count(F.lit(1)).alias("__n_hist"))
-                .localCheckpoint()
-            )
-            spark.sparkContext.setJobDescription(None)
-            return bkeys, hist_lang
-
-        _hist_fut = _pool.submit(_hist_side)
-
-        # 2. near-dup: batch bands x history index + batch x batch
-        #    (lower id) — runs concurrently with the history side above
-        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
-        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
-        c_bh = (
-            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-            .join(
-                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
-                ["band", "key"],
-            )
-            .select("later_id", "earlier_id")
-        )
-        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
-        c_bb = (
-            bb_a.join(bb_b, ["band", "key"])
-            .filter(F.col("earlier_id") < F.col("later_id"))
-            .select("later_id", "earlier_id")
-        )
-        cands = c_bh.unionByName(c_bb).distinct()
-        # unions over materialized caches: honest static sizes, no hint
-        # needed (opt r13 — see q344 / _portable_minhash_relations)
-        old_sh = sh_h.unionByName(sh_b)
-        old_sz = (
-            both_h.select("doc_id", "n_sh")
-            .unionByName(both_b.select("doc_id", "n_sh"))
-        )
-        b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
-        b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
-        # join the history side before releasing the caches: its
-        # checkpoints (hist_s2/bkeys/hist_lang) and b_s2's are the last
-        # cache consumers and all have materialized now
-        bkeys, hist_lang = _hist_fut.result()
-        sh_h.unpersist()
-        sh_b.unpersist()
+    bkeys, hist_lang = chain.hist_state
 
     # 3. quality: Gopher rules + the FROZEN boiler filter INLINE
     # (spread: two tokenize passes over the checkpointed batch
     # survivors — opt r13 parallelism floor, no-op at corpus scale)
-    bs2 = spread(b_s2)
+    bs2 = spread(chain.b_s2)
     b_s3 = (
         _q330_gopher(bs2)
         .join(_frozen_boiler_drops(bs2, bkeys), "doc_id", "left_anti")
         .localCheckpoint()
     )
-
-    # 4. mixture thresholds from the MERGED per-lang state
-    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
-    merged = hist_lang.join(b_lang, "lang", "full_outer").select(
-        "lang",
-        (
-            F.coalesce(F.col("__n_hist"), F.lit(0))
-            + F.coalesce(F.col("__n_batch"), F.lit(0))
-        ).alias("n_docs"),
-    )
-    tot = merged.agg(
-        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-    )
-    thresh = merged.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.least(
-            F.lit(_Q330_BUCKETS).cast("bigint"),
-            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-        ).alias("keep_thresh"),
-    )
-    b_s4 = (
-        b_s3.join(F.broadcast(thresh), "lang")
-        .filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        .select("doc_id", "lang")
-        .localCheckpoint()
-    )
-
-    # 5. append-only shard assignment over the batch's survivors
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-    comp = (
-        b_s4.select(
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
-        .groupBy("shard", "lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs")
-    )
-
-    return (
-        _q330_stage_row(hist, "0_history")
-        .unionByName(_q330_stage_row(batch, "0_batch"))
-        .unionByName(_q330_stage_row(b_s1, "1_exact_dedup"))
-        .unionByName(_q330_stage_row(b_s2, "2_near_dedup"))
-        .unionByName(_q330_stage_row(bkeys, "3_boiler_keys"))
-        .unionByName(_q330_stage_row(b_s3, "3_quality"))
-        .unionByName(_q330_stage_row(b_s4, "4_mixture"))
-        .unionByName(comp)
+    return _batch_stage_rows(
+        chain, hist_lang, b_s3, _q330_stage_row(bkeys, "3_boiler_keys")
     )
 
 
@@ -2627,83 +2508,7 @@ def q350_incremental_frozen_chain(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _q349_oracle() -> str:
-    from .dedup_q import _MH_P, _mh_consts
-
-    n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
-    rows = k // bands
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(_mh_consts(k))
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, lang, text,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
-              || ':{_Q344_SPLIT_SEED}'), 1, 15)) AS BIGINT) % 10000
-           < {_Q344_HIST_CUT} AS is_hist
-  FROM documents
-),
-s1 AS (
-  SELECT doc_id, lang, text, is_hist FROM (
-    SELECT b.*, row_number() OVER (
-      PARTITION BY md5(text)
-      ORDER BY CASE WHEN is_hist THEN 0 ELSE 1 END, doc_id) AS rn
-    FROM base b) q
-  WHERE rn = 1
-),
-toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
-  FROM toks1 WHERE len(t) >= {n}
-),
-ex AS (SELECT doc_id, shingle,
-              CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-       FROM sh),
-sigs AS (SELECT doc_id,
-         {mins}
-         FROM ex GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS later_id, y.doc_id AS earlier_id
-  FROM banded x
-  JOIN s1 sx ON sx.doc_id = x.doc_id
-  JOIN banded y ON x.band = y.band AND x.key = y.key
-  JOIN s1 sy ON sy.doc_id = y.doc_id
-  WHERE (sy.is_hist AND NOT sx.is_hist)
-     OR (sy.is_hist = sx.is_hist AND sy.doc_id < sx.doc_id)
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-vcommon AS (
-  SELECT c.later_id, c.earlier_id, COUNT(*) AS nc
-  FROM cands c
-  JOIN sh a ON a.doc_id = c.later_id
-  JOIN sh b ON b.doc_id = c.earlier_id AND b.shingle = a.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT v.later_id FROM vcommon v
-  JOIN sizes sa ON sa.doc_id = v.later_id
-  JOIN sizes sb ON sb.doc_id = v.earlier_id
-  WHERE 2 * v.nc >= sa.n_sh + sb.n_sh - v.nc
-),
-s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
-         (SELECT 1 FROM verified v WHERE v.later_id = s1.doc_id)),
-meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
+    return _chain_oracle_prefix() + f"""meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
                 len(list_distinct(t)) AS nd,
                 CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS ch
          FROM (SELECT doc_id, lang, is_hist,
@@ -2772,61 +2577,7 @@ def q349_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    from ..operators.sampling import portable_bucket
     from ..sources.versioned import create_table, merge_version, read_version
-    from .dedup_q import _band_keys, _portable_minhash_relations
-
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
-    )
-    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
-    hist = base.filter(is_hist)
-    batch = base.filter(~is_hist)
-
-    # ---- stage 1: exact dedup for BOTH epochs in ONE window pass
-    # (opt r14, guide §2.4 — see q344: the oracle's s1 CTE shape; one
-    # checkpoint job replaces hist_s1 ckpt + b_s1 ckpt + the hash
-    # anti-join)
-    w = Window.partitionBy(F.md5("text")).orderBy(
-        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
-    )
-    s1_all = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
-    hist_s1 = s1_all.filter(is_hist)
-    b_s1 = s1_all.filter(~is_hist)
-
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-
-    def _mixture_and_shards(s3: DataFrame, counts: DataFrame) -> DataFrame:
-        """q344's stages 4-5: thresholds from ``counts``, then per-doc
-        shard ranks among ``s3``'s own survivors -> (doc_id, lang, shard)."""
-        tot = counts.agg(
-            F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-        )
-        thresh = counts.crossJoin(F.broadcast(tot)).select(
-            "lang",
-            F.least(
-                F.lit(_Q330_BUCKETS).cast("bigint"),
-                F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-            ).alias("keep_thresh"),
-        )
-        s4 = s3.join(F.broadcast(thresh), "lang").filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        return s4.select(
-            "doc_id",
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
 
     # ---- the release table root (driver-side prep, cheap)
     root = os.path.join(
@@ -2841,107 +2592,41 @@ def q349_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.rmtree(os.path.join(root, old), ignore_errors=True)
     table_dir = os.path.join(root, f"release_{sf_tag}_{uuid.uuid4().hex[:8]}")
 
-    # OVERLAP (opt r14, guide §2.6 — q344's two-handoff shape, plus the
-    # WHOLE epoch-1 publish): the worker thread builds the history
-    # relations, then keeps running the history verify, the hist_s2
-    # checkpoint, the per-lang counts and the version-1 release WRITE
-    # while the main thread runs the batch shingle cache, the batch
-    # verify and the b_s2 checkpoint. Join points: the batch candidate
-    # join needs both_h (first future); the epoch-2 merged counts and
-    # the version-2 MERGE need hist_lang and the committed version 1
-    # (second future).
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _rel_fut = _pool.submit(
-            _portable_minhash_relations,
-            hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
-        )
-        # batch shingle cache builds concurrently with the history one
-        sh_b, both_b, _ = _portable_minhash_relations(
-            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-        )
-        sh_h, both_h, cands_h = _rel_fut.result()
+    def _release(s3: DataFrame, counts: DataFrame) -> DataFrame:
+        """q344's stages 4-5 -> (doc_id, lang, shard): the mixture under
+        ``counts``, then per-doc shard ranks among ``s3``'s own survivors."""
+        return _mixture_keep(s3, counts).select("doc_id", "lang", _shard_col())
 
-        def _hist_side():
-            spark.sparkContext.setJobDescription("q349: epoch-1 history publish")
-            hist_drops = _verify_drops_j05(
-                cands_h.select(
-                    F.col("doc_b").alias("later_id"),
-                    F.col("doc_a").alias("earlier_id"),
-                ),
-                sh_h, sh_h, both_h, both_h,
-            )
-            # checkpointed: the epoch-1 publish AND the epoch-2 mixture
-            # state both read the history near-dup survivors
-            hist_s2 = hist_s1.join(
-                hist_drops, "doc_id", "left_anti"
-            ).localCheckpoint()
-            # spread (opt r13): parallelism floor over the checkpointed
-            # stage output before the tokenize pass; no-op at corpus
-            # scale
-            hist_s3 = _q330_gopher(spread(hist_s2))
-            hist_lang = (
-                hist_s3.groupBy("lang")
-                .agg(F.count(F.lit(1)).alias("__n_hist"))
-                .localCheckpoint()
-            )
-            h_release = _mixture_and_shards(
-                hist_s3, hist_lang.select("lang", F.col("__n_hist").alias("n_docs"))
-            )
-            # version 1 = the history epoch
-            create_table(h_release, table_dir, "lang")
-            spark.sparkContext.setJobDescription(None)
-            return hist_lang
-
-        _hist_fut = _pool.submit(_hist_side)
-
-        # ---- epoch-2 chain: q344's incremental batch run (concurrent
-        # with the epoch-1 publish above)
-        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
-        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
-        c_bh = (
-            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-            .join(
-                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
-                ["band", "key"],
-            )
-            .select("later_id", "earlier_id")
+    def _epoch1_publish(s1_all: DataFrame, is_hist: Column, hist_drops: DataFrame):
+        # checkpointed: the epoch-1 publish AND the epoch-2 mixture
+        # state both read the history near-dup survivors
+        hist_s2 = (
+            s1_all.filter(is_hist)
+            .join(hist_drops, "doc_id", "left_anti")
+            .localCheckpoint()
         )
-        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
-        c_bb = (
-            bb_a.join(bb_b, ["band", "key"])
-            .filter(F.col("earlier_id") < F.col("later_id"))
-            .select("later_id", "earlier_id")
+        # spread (opt r13): parallelism floor over the checkpointed
+        # stage output before the tokenize pass; no-op at corpus scale
+        hist_s3 = _q330_gopher(spread(hist_s2))
+        hist_lang = _hist_lang_state(hist_s3)
+        # version 1 = the history epoch, under history-only counts
+        h_release = _release(
+            hist_s3, hist_lang.select("lang", F.col("__n_hist").alias("n_docs"))
         )
-        cands = c_bh.unionByName(c_bb).distinct()
-        # unions over materialized caches: honest static sizes, no hint
-        # needed (opt r13 — see q344 / _portable_minhash_relations)
-        old_sh = sh_h.unionByName(sh_b)
-        old_sz = (
-            both_h.select("doc_id", "n_sh")
-            .unionByName(both_b.select("doc_id", "n_sh"))
-        )
-        b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
-        b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
-        # join the epoch-1 publish before releasing the caches: its
-        # jobs (hist_s2 ckpt, hist_lang ckpt, the release write) and
-        # b_s2's checkpoint are the last cache consumers
-        hist_lang = _hist_fut.result()
-        sh_h.unpersist()
-        sh_b.unpersist()
+        create_table(h_release, table_dir, "lang")
+        return hist_lang
 
-    b_s3 = _q330_gopher(spread(b_s2))
-    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
-    merged = hist_lang.join(b_lang, "lang", "full_outer").select(
-        "lang",
-        (
-            F.coalesce(F.col("__n_hist"), F.lit(0))
-            + F.coalesce(F.col("__n_batch"), F.lit(0))
-        ).alias("n_docs"),
+    # the worker runs the WHOLE epoch-1 publish (history verify, hist_s2
+    # checkpoint, per-lang counts, the version-1 release write) while
+    # the main thread runs the batch verify and the b_s2 checkpoint
+    chain = _incremental_chain(
+        spark, sf_dir, "q349: epoch-1 history publish", _epoch1_publish
     )
-    b_release = _mixture_and_shards(b_s3, merged)
 
-    # ---- version 2 = MERGE the batch epoch (disjoint keys -> insert)
+    # ---- version 2 = MERGE the batch epoch (disjoint keys -> insert),
+    # mixture under the MERGED counts
+    b_s3 = _q330_gopher(spread(chain.b_s2))
+    b_release = _release(b_s3, _merged_lang_counts(chain.hist_state, b_s3))
     merge_version(spark, table_dir, b_release, key_cols=["doc_id"])
 
     # ---- prove the releases by reading the TABLE back (time travel)

@@ -5,6 +5,7 @@ overlapping pair runs left-to-right."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.curation_q import (
@@ -13,6 +14,7 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.llm.curation_q import (
     _IP_RE,
     _PHONE_RE,
     _augmented_text,
+    _overlap,
     q139_pii_redaction,
     q140_boilerplate_lines,
     q141_bpe_merges,
@@ -271,3 +273,31 @@ def test_bpe_oracle_survives_merge_exhaustion(spark):
     assert merges == [] and oracle_merges == []  # exhausted on both engines
     # pass-through: every word stays a single symbol, so subwords == tokens
     assert stats == oracle_stats == {1: (4, 4), 2: (2, 2)}
+
+
+def test_overlap_worker_inherits_job_group_and_reraises(spark):
+    """The chain's overlap worker runs its Spark jobs inside the CALLER's
+    job group (so a group-scoped profile or cancel covers both threads),
+    under its own label, without leaking that label back to the caller;
+    an exception raised on the worker re-raises at the join point."""
+    sc = spark.sparkContext
+
+    def worker():
+        spark.range(3).count()
+        return sc.getLocalProperty("spark.jobGroup.id"), sc.getLocalProperty(
+            "spark.job.description"
+        )
+
+    def boom():
+        raise ValueError("worker failed")
+
+    sc.setJobGroup("overlap-test", "caller")
+    try:
+        assert _overlap(spark, "worker label", worker)() == ("overlap-test", "worker label")
+        assert sc.statusTracker().getJobIdsForGroup("overlap-test")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        join = _overlap(spark, "worker label", boom)
+        with pytest.raises(ValueError, match="worker failed"):
+            join()
+    finally:
+        sc._jsc.clearJobGroup()

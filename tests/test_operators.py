@@ -447,17 +447,17 @@ def test_spread_is_noop_when_already_parallel(spark):
     """spread() must not inject a shuffle when the input already has
     enough partitions — at real scale it has to be free. r14 semantics:
     the fan-out target scales with the input's estimated BYTES
-    (24 KiB/partition, floor 2, capped at min_parts/defaultParallelism),
+    (24 KiB/partition, floor 2, capped at max_parts/defaultParallelism),
     and a plan that already contains an Exchange is returned untouched
     (probing it would execute its intermediate stages)."""
     from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import spread
 
     # already-shuffled plan: returned as-is, never probed (r14 guard)
     df = spark.range(1000).repartition(8)
-    assert spread(df, 8) is df
+    assert spread(df, max_parts=8) is df
     # byte-tiny input: floor applies but is BYTE-SCALED, not flat width
     small = spark.range(10).coalesce(1)
-    out = spread(small, 8)
+    out = spread(small, max_parts=8)
     parts = out.rdd.getNumPartitions()
     assert 2 <= parts <= 8, parts
     assert sorted(r["id"] for r in out.collect()) == list(range(10))
@@ -467,8 +467,22 @@ def test_spread_is_noop_when_already_parallel(spark):
     wide = spark.range(200_000).select(
         "id", F.repeat(F.lit("x"), 64).alias("pad")
     ).coalesce(1)
-    assert spread(wide, 8).rdd.getNumPartitions() == 8
+    assert spread(wide, max_parts=8).rdd.getNumPartitions() == 8
 
+
+
+def test_materialized_cache_raises_when_the_cache_did_not_load(spark, monkeypatch):
+    """The honest-stats guard is an explicit RuntimeError, not an
+    assert, so it still fires under ``python -O``: a cache() that does
+    not cache must fail the build instead of planning joins from the
+    explode underestimate."""
+    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import materialized_cache
+
+    df = spark.range(10)
+    # the concrete (classic) DataFrame class: cache() returns the frame uncached
+    monkeypatch.setattr(type(df), "cache", lambda self: self)
+    with pytest.raises(RuntimeError, match="not materialized"):
+        materialized_cache(df)
 
 def test_star_cc_matches_propagation_on_mixed_graph(spark):
     """algorithm='star' must produce identical labels to propagation on

@@ -749,9 +749,12 @@ _REGISTRY_DFS: dict = {}
 
 
 def _registry_dfs(spark):
+    # build into a local map and publish it only once every builder has
+    # returned: a builder that raises must fail BOTH lints, not leave the
+    # second one walking a partial map
     if not _REGISTRY_DFS:
-        for name, q in QUERIES.items():
-            _REGISTRY_DFS[name] = q.builder(spark, SF_SMALL)
+        dfs = {name: q.builder(spark, SF_SMALL) for name, q in QUERIES.items()}
+        _REGISTRY_DFS.update(dfs)
     return _REGISTRY_DFS
 
 
